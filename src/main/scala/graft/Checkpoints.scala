@@ -5,18 +5,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Lineage truncation for iterative operators (CC rounds, PageRank, k-means,
   * BPE merges): every fixpoint loop re-plans on its previous round's output,
   * and without a cut the plan tree doubles per round until analysis time
-  * dominates. Default is `localCheckpoint()` — executor-memory blocks, no
-  * distributed filesystem needed, right for local[32] and short-lived jobs.
+  * dominates.
   *
-  * On a 1000-executor cluster an executor loss invalidates a local
+  * Every cut goes through ONE path, [[cut]] (or its postfix spelling
+  * `.cutLineage()`), which materializes through
+  * [[org.apache.spark.sql.graft.PartitionedCheckpoint]]: the rebuilt frame
+  * keeps the executed plan's hash partitioning (so loop rounds that re-join
+  * a loop-invariant frame on its key plan exchange-free) and carries the
+  * MEASURED row count and byte size as its plan statistics (so every later
+  * broadcast decision, and every caller that sizes a partition count via
+  * [[measuredBytes]], plans from real sizes, not the origin's estimate).
+  *
+  * Backend: `localCheckpoint` by default — executor-memory blocks, no
+  * distributed filesystem needed, right for local mode and short-lived
+  * jobs. On a 1000-executor cluster an executor loss invalidates a local
   * checkpoint's blocks and fails the job, so production runs flip
   * `graft.checkpoint.reliable=true` to swap in reliable `checkpoint()`
   * (HDFS/object-store backed, survives executor loss; the reference's
   * single-process engine has no equivalent — its failure domain is the whole
   * process). The checkpoint dir comes from `graft.checkpoint.dir`, or the
   * already-configured SparkContext dir, or a temp dir as a last resort.
-  * Both paths are eager, so job-count and observation-firing semantics are
-  * identical regardless of the flag.
+  * Both backends are eager and run as one SQL execution, so job-count and
+  * observation-firing semantics are identical regardless of the flag.
   */
 object Checkpoints {
 
@@ -48,47 +58,24 @@ object Checkpoints {
         resolveDir(spark.sparkContext.master, spark.conf.getOption(DirConf)))
     }
 
+  /** Eagerly materializes `df` and truncates its lineage, keeping its hash
+    * partitioning and recording its measured size (see the object doc).
+    */
   def cut(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    if (reliable(spark)) {
-      ensureCheckpointDir(spark)
-      df.checkpoint()
-    } else {
-      val out = df.localCheckpoint()
-      out.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => live.add(l.rdd)
-      }
-      out
-    }
-  }
-
-  /** [[cut]] that KEEPS the frame's hash partitioning (round 18, VERDICT
-    * r17 item 1): a loop-invariant frame checkpointed through the stock
-    * `localCheckpoint()` scans back as `UnknownPartitioning`, so every
-    * iterative round re-shuffles it; this variant pins the executed plan's
-    * real `HashPartitioning` on the rebuilt `LogicalRDD` so the round
-    * joins/aggregations on that key plan exchange-free (guide §2.4).
-    * Same eagerness, same release discipline, same reliable-mode backend
-    * as [[cut]]; values unaffected (partitioning never enters a result).
-    */
-  def cutPartitioned(df: DataFrame): DataFrame = cutPartitionedCounted(df)._1
-
-  /** [[cutPartitioned]] that also returns the materialized ROW COUNT and
-    * BYTE SIZE (summed unsafe-row bytes) — the eager checkpoint walks its
-    * rows anyway, so callers that need a size to derive a scale-adaptive
-    * partition count or a broadcast-vs-pin decision (guide §2/§3: derive
-    * from the data, never from a constant or an estimate) get the exact
-    * numbers for free, with zero extra jobs.
-    */
-  def cutPartitionedCounted(df: DataFrame): (DataFrame, Long, Long) = {
     val spark = df.sparkSession
     val rel = reliable(spark)
     if (rel) ensureCheckpointDir(spark)
-    val (out, rdd, rows, bytes) =
-      org.apache.spark.sql.graft.PartitionedCheckpoint.cut(df, rel)
+    val (out, rdd) = org.apache.spark.sql.graft.PartitionedCheckpoint.cut(df, rel)
     if (!rel) live.add(rdd)
-    (out, rows, bytes)
+    out
   }
+
+  /** Materialized byte size (summed unsafe-row bytes) of a frame returned
+    * by [[cut]]: the cut stores it as the plan's `sizeInBytes`, so reading
+    * it costs no job.
+    */
+  def measuredBytes(cut: DataFrame): Long =
+    cut.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
 
   /** Scale-adaptive partition count for a frame of `bytes` MEASURED bytes:
     * enough partitions to use the session's parallelism once the data is
@@ -104,9 +91,9 @@ object Checkpoints {
     val minPartitionBytes = 1L << 20
     // floor 2, not 1: repartition(1, key) plans as SinglePartition, and
     // EnsureRequirements re-expands single-partition JOIN children to the
-    // conf'd shuffle partitions (measured round 18, KcoreRoundProbe:
-    // n=1 → both join sides re-shuffled to 8; n=2 → the pinned side plans
-    // exchange-free), defeating the pin this count exists to serve
+    // conf'd shuffle partitions (measured round 18: n=1 → both join sides
+    // re-shuffled; n=2 → the pinned side plans exchange-free, which
+    // CheckpointSpec asserts), defeating the pin this count exists to serve
     math.max(2L, math.min(maxN.toLong, bytes / minPartitionBytes)).toInt
   }
 
@@ -143,15 +130,7 @@ object Checkpoints {
   }
 
   implicit class CheckpointOps(private val df: DataFrame) extends AnyVal {
-    /** Eagerly materializes `df` and truncates its lineage; backend chosen
-      * by [[ReliableConf]].
-      */
+    /** Postfix spelling of [[Checkpoints.cut]] for chained call sites. */
     def cutLineage(): DataFrame = cut(df)
-
-    /** [[cutLineage]] keeping the frame's hash partitioning — for
-      * loop-invariant frames that iterative rounds re-join on the
-      * partitioning key (see [[Checkpoints.cutPartitioned]]).
-      */
-    def cutLineagePartitioned(): DataFrame = cutPartitioned(df)
   }
 }

@@ -932,7 +932,7 @@ object Dedup {
     * The loop stops when no label shrank or at `maxRounds` — a diverging
     * input fails loudly instead of silently under-merging.
     *
-    * Job shape: ONE localCheckpoint job per round, with the convergence
+    * Job shape: ONE checkpoint job per round, with the convergence
     * check riding that same job via `observe()` (the changed-count
     * aggregates while the round materializes) instead of a second count
     * job. Lazily chaining several rounds into one job was tried and
@@ -957,26 +957,25 @@ object Dedup {
     // the largest shuffle this routine would have at corpus scale. Both
     // production callers already feed unique a<b pairs anyway.
     // Partition-once bidirectional edge set (round 18, VERDICT r17 item 2):
-    // every propagate round joins bidir on id_b, and the stock checkpoint
-    // scans back as UnknownPartitioning, so each round re-shuffled the
-    // FULL edge set — the largest per-round exchange at corpus scale.
-    // Two-phase build: (1) materialize the canonical pair set ONCE
-    // (cutPartitionedCounted — the expensive pair-derivation subtree used
-    // to run twice through the old unionAll), then (2) explode both
-    // directions. The PIN is size-adaptive (guide §3.1 — broadcast the
-    // side that fits): below the session's broadcast threshold the stock
-    // checkpoint is kept, AQE broadcasts bidir in every round join, and a
-    // pinned layout would only add per-round stage-materialization jobs
-    // (measured +11 tiny jobs/round at bench scale, CcRoundProbe, zero
-    // shuffle saved — a broadcast side never shuffles); above it the
-    // rounds run sort-merge, and hash-partitioning bidir on id_b once
-    // (cutLineagePartitioned) makes the edge side of every round's
-    // neighbor join exchange-free (guide §2.4) — the largest per-round
-    // exchange at corpus scale gone. Both the cutoff and the partition
-    // count derive from the MATERIALIZED pair count (guide §2: from the
-    // data, never a constant), so the shape is scale-continuous.
-    val (pairs1, _, pairBytes) =
-      graft.Checkpoints.cutPartitionedCounted(edges.select(col("id_a"), col("id_b")))
+    // every propagate round joins bidir on id_b, and a cut that forgot its
+    // partitioning would re-shuffle the FULL edge set each round — the
+    // largest per-round exchange at corpus scale.
+    // Two-phase build: (1) materialize the canonical pair set ONCE (the
+    // expensive pair-derivation subtree used to run twice through the old
+    // unionAll), then (2) explode both directions. The PIN is size-adaptive
+    // (guide §3.1 — broadcast the side that fits): when bidir fits under
+    // the session's broadcast threshold it is cut as it comes, AQE
+    // broadcasts it in every round join, and a pinned layout would only add
+    // per-round stage-materialization jobs (measured round 18: +11 tiny
+    // jobs/round at bench scale, zero shuffle saved — a broadcast side
+    // never shuffles); above it the rounds run sort-merge, and
+    // hash-partitioning bidir on id_b once makes the edge side of every
+    // round's neighbor join exchange-free (guide §2.4). Both the cutoff and
+    // the partition count derive from the pair set's MEASURED bytes, read
+    // from the cut's own plan stats (guide §2: from the data, never a
+    // constant), so the shape is scale-continuous.
+    val pairs1 = graft.Checkpoints.cut(edges.select(col("id_a"), col("id_b")))
+    val pairBytes = graft.Checkpoints.measuredBytes(pairs1)
     val bidirRaw = pairs1.select(explode(array(
         struct(col("id_a"), col("id_b")),
         struct(col("id_b").as("id_a"), col("id_a").as("id_b")))).as("p"))
@@ -985,10 +984,10 @@ object Dedup {
     val bcThreshold = sess.sessionState.conf.autoBroadcastJoinThreshold
     val bidir =
       if (bcThreshold > 0 && 2 * pairBytes <= bcThreshold) {
-        graft.Checkpoints.cutPartitioned(bidirRaw)
+        bidirRaw.cutLineage()
       } else {
         val nPart = graft.Checkpoints.sizedPartitions(sess, 2 * pairBytes)
-        bidirRaw.repartition(nPart, col("id_b")).cutLineagePartitioned()
+        bidirRaw.repartition(nPart, col("id_b")).cutLineage()
       }
     // One round, Shiloach–Vishkin-shaped: (1) PROPAGATE — take the min of
     // self and neighbors' labels; (2) HOOK — every vertex reports its new

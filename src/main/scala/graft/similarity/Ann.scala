@@ -849,18 +849,22 @@ object Ann {
     val metaRow = base.agg(count(lit(1)).as("n"),
       countDistinct(col("label")).as("nl"),
       max(size(col("ie"))).as("dims")).head()
-    val (n, nLabels, dims) =
-      (metaRow.getLong(0), metaRow.getLong(1), metaRow.getInt(2))
+    val n = metaRow.getLong(0)
+    // max(size) is NULL over zero rows: name the input, never an NPE
+    require(n > 0, s"IVF quantizer needs at least one vector: empty embeddings table under $dir")
+    val (nLabels, dims) = (metaRow.getLong(1), metaRow.getInt(2))
     val levels = math.max(0, math.ceil(math.log(
       n.toDouble / (nLabels.toDouble * targetCell)) / math.log(2.0)).toInt)
     // The build's measured cost profile (round 15, 2M-vector stage trace):
     // eager per-level localCheckpoints of ie-carrying frames dominated —
     // not the leaf explode, not the joins per se. So the heavy integer
     // vectors live in ONE checkpointed frame, `basePart`, hash-partitioned
-    // AND sorted by vec_id (localCheckpoint preserves both); every later
-    // stage that needs ie re-attaches it through an exchange-free merge
-    // join whose big side never re-sorts, and every per-level checkpoint
-    // is a SLIM (vec_id, cell) membership map.
+    // AND sorted by vec_id (Checkpoints.cut keeps the executed plan's hash
+    // partitioning and within-partition ordering, which the stock
+    // localCheckpoint dropped under AQE); every later stage that needs ie
+    // re-attaches it through an exchange-free merge join whose big side
+    // never re-sorts, and every per-level checkpoint is a SLIM
+    // (vec_id, cell) membership map.
     val dimSums = (0 until dims).map(d =>
       sum(expr(s"element_at(ie, ${d + 1})")).as(s"s$d"))
     def leafStatsOf(membered: DataFrame): DataFrame = membered

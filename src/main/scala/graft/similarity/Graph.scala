@@ -87,18 +87,18 @@ object Graph {
 
   /** Both-direction adjacency of the canonical edge set, materialized
     * ONCE (single-pass explode — the old unionAll ran the edge-derivation
-    * subtree twice) and, when it is too big to broadcast,
-    * hash-partitioned on `src` and checkpointed KEEPING that partitioning
-    * ([[graft.Checkpoints.cutPartitioned]] — the stock localCheckpoint
-    * scans back as UnknownPartitioning, so every loop round re-shuffled
-    * the edge set; measured round 18, see CoPartProbe). Every iterative
+    * subtree twice), hash-partitioned on `src` at every size (see the pin
+    * note below) and checkpointed KEEPING that partitioning
+    * ([[graft.Checkpoints.cut]] — the stock localCheckpoint scanned back
+    * as UnknownPartitioning, so every loop round re-shuffled the edge set;
+    * CheckpointSpec asserts the kept partitioning). Every iterative
     * operator below re-joins the adjacency on `src` per round, and the
     * degree table is a src-keyed count over it, so ONE partitioned
     * materialization makes the edge side of every round join — and the
     * degree aggregate — exchange-free (guide §2.4); only vertex-sized
     * frontier/label frames still move per round.
     */
-  private def adjPartitionedOf(e: DataFrame, eBytes: Long): DataFrame = {
+  private def adjPartitionedOf(e: DataFrame): DataFrame = {
     val spark = e.sparkSession
     // explode, not unionAll: ONE pass over `e`
     val raw = e.select(explode(array(
@@ -115,8 +115,9 @@ object Graph {
     // count derives from the MEASURED bytes (guide §2: from the data,
     // never a constant): a corpus-sized graph fans out to the conf'd
     // parallelism, a bench-sized one collapses to the 2-partition floor.
-    val n = graft.Checkpoints.sizedPartitions(spark, 2 * eBytes)
-    raw.repartition(n, col("src")).cutLineagePartitioned()
+    val n = graft.Checkpoints.sizedPartitions(spark,
+      2 * graft.Checkpoints.measuredBytes(e))
+    raw.repartition(n, col("src")).cutLineage()
   }
 
   /** Undirected degrees as a `src`-keyed count over the partitioned
@@ -212,11 +213,11 @@ object Graph {
     jaccardOf(edges(spark, dir))
 
   def jaccardOf(edgeSrc: DataFrame): DataFrame = {
-    val (e, _, eBytes) = graft.Checkpoints.cutPartitionedCounted(edgeSrc)
+    val e = edgeSrc.cutLineage()
     // partitioned adjacency (round 18): both common-neighbor joins key on
     // adj's src (renamed u / v), so the adjacency never re-shuffles, and
     // the degree count runs on the pinned partitioning exchange-free
-    val adj = adjPartitionedOf(e, eBytes)
+    val adj = adjPartitionedOf(e)
     val deg = degreesOfAdj(adj)
     val common = e
       .join(adj.select(col("src").as("u"), col("dst").as("wa")), Seq("u"))
@@ -275,8 +276,8 @@ object Graph {
     // src-partitioned for the next round, and the final degree aggregate
     // is exchange-free too. Before: 5 exchanges/round (2 edge-sized);
     // after: 2/round (1 edge-sized) — ProfJobs A/B in OPTIMIZATION_r18.md.
-    val (e, _, eBytes) = graft.Checkpoints.cutPartitionedCounted(edges)
-    var adj = adjPartitionedOf(e, eBytes)
+    val e = edges.cutLineage()
+    var adj = adjPartitionedOf(e)
     for (_ <- 1 to rounds) {
       val live = adj.groupBy(col("src")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k)
@@ -293,7 +294,7 @@ object Graph {
         .join(live.withColumnRenamed("src", "dst").hint("merge"),
           Seq("dst"), "left_semi")
         .select(col("dst").as("src"), col("src").as("dst"))
-        .cutLineagePartitioned()
+        .cutLineage()
     }
     degreesOfAdj(adj).withColumnRenamed("degree", "core_degree")
       .orderBy(col("vec_id"))
@@ -342,8 +343,8 @@ object Graph {
     // dst — identical on a symmetric adjacency — so the degree step is
     // exchange-free too. Only the per-step dst-keyed sums still shuffle
     // (map-side partials bound them to vertex-sized).
-    val (e, _, eBytes) = graft.Checkpoints.cutPartitionedCounted(edgeSrc)
-    val adj = adjPartitionedOf(e, eBytes)
+    val e = edgeSrc.cutLineage()
+    val adj = adjPartitionedOf(e)
     // c1 = degree
     val c1 = adj.groupBy(col("src").as("vec_id")).agg(count(lit(1)).as("c1"))
     val c2 = adj.join(c1.withColumnRenamed("vec_id", "src"), Seq("src"))
@@ -413,8 +414,8 @@ object Graph {
     // partitioned adjacency (round 18): each label round joins adj on src,
     // so the pinned partitioning makes the edge side of all 3 rounds
     // exchange-free — only the vertex-sized label table moves per round
-    val (e, _, eBytes) = graft.Checkpoints.cutPartitionedCounted(edgeSrc)
-    val adj = adjPartitionedOf(e, eBytes)
+    val e = edgeSrc.cutLineage()
+    val adj = adjPartitionedOf(e)
     val lab = labelsOf(adj)
     val sizes = lab.groupBy(col("label")).agg(count(lit(1)).as("community_size"))
     lab.join(sizes, Seq("label"))
@@ -467,8 +468,8 @@ object Graph {
     modularityOf(edges(spark, dir))
 
   def modularityOf(edgeSrc: DataFrame): DataFrame = {
-    val (e, _, eBytes) = graft.Checkpoints.cutPartitionedCounted(edgeSrc)
-    val adj = adjPartitionedOf(e, eBytes)
+    val e = edgeSrc.cutLineage()
+    val adj = adjPartitionedOf(e)
     val lab = labelsOf(adj) // already lineage-cut by labelsOf
     val ein = e
       .join(lab.select(col("vec_id").as("u"), col("label").as("lu")), Seq("u"))
@@ -534,8 +535,8 @@ object Graph {
     // partitioned adjacency (round 18): the per-round frontier join keys
     // on src, so the pinned partitioning removes the edge-set exchange
     // from every BFS round (only the vertex-sized frontier still moves)
-    val (e, _, eBytes) = graft.Checkpoints.cutPartitionedCounted(edgeSrc)
-    val adj = adjPartitionedOf(e, eBytes)
+    val e = edgeSrc.cutLineage()
+    val adj = adjPartitionedOf(e)
     var r = adj.select(col("dst").as("vec_id")).distinct()
       .filter(col("vec_id") % 100 === 0)
       .withColumn("hop", lit(0L))
@@ -623,14 +624,15 @@ object Graph {
     // same measured-bytes pin gate: below the broadcast threshold the
     // rounds broadcast adj and a pin would only add stage jobs; above it
     // the pinned layout makes the edge side exchange-free (guide §2.4/§3.1).
-    val (wCut, _, wBytes) = graft.Checkpoints.cutPartitionedCounted(weighted)
+    val wCut = weighted.cutLineage()
     val adjRaw = wCut.select(explode(array(
         struct(col("u").as("src"), col("v").as("dst"), col("w")),
         struct(col("v").as("src"), col("u").as("dst"), col("w")))).as("p"))
       .select(col("p.src").as("src"), col("p.dst").as("dst"), col("p.w").as("w"))
     val adj = adjRaw.repartition(
-        graft.Checkpoints.sizedPartitions(spark, 2 * wBytes), col("src"))
-      .cutLineagePartitioned()
+        graft.Checkpoints.sizedPartitions(spark,
+          2 * graft.Checkpoints.measuredBytes(wCut)), col("src"))
+      .cutLineage()
     var d = adj.select(col("dst").as("vec_id")).distinct()
       .filter(col("vec_id") % 100 === 0)
       .withColumn("dist", lit(0L))
@@ -773,8 +775,8 @@ object Graph {
     // partitioned adjacency (round 18): degrees and the src-side degree
     // attach run exchange-free on the pinned partitioning; only the
     // dst-side attach still shuffles the edge set (second key — inherent)
-    val (e, _, eBytes) = graft.Checkpoints.cutPartitionedCounted(edgeSrc)
-    val adj = adjPartitionedOf(e, eBytes)
+    val e = edgeSrc.cutLineage()
+    val adj = adjPartitionedOf(e)
     val deg = degreesOfAdj(adj)
     val pairs = adj
       .join(deg.select(col("vec_id").as("src"), col("degree").as("dx")),
@@ -839,13 +841,13 @@ object Graph {
     raLinkpredOf(edges(spark, dir))
 
   def raLinkpredOf(edgeSrc: DataFrame): DataFrame = {
-    val (e, _, eBytes) = graft.Checkpoints.cutPartitionedCounted(edgeSrc)
+    val e = edgeSrc.cutLineage()
     // partitioned adjacency (round 18): the wedge self-join and the
     // degree attach all key on adj's src, so with the pinned partitioning
     // the whole wedge build plans with ZERO exchanges below the candidate
     // aggregate (the anti-join/groupBy on (u, v) is the one shuffle left,
     // and it is the output-sized one the algorithm requires)
-    val adj = adjPartitionedOf(e, eBytes)
+    val adj = adjPartitionedOf(e)
     val deg = adj.groupBy(col("src")).agg(count(lit(1)).as("degree"))
     val wedges = adj.select(col("src").as("w"), col("dst").as("u"))
       .join(adj.select(col("src").as("w"), col("dst").as("v")), Seq("w"))

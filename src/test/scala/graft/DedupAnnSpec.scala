@@ -49,6 +49,16 @@ class DedupAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("IVF quantizer on an empty embeddings table fails with a named error, not an NPE") {
+    val dir = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("/tmp"), "graft_empty_emb").toString
+    Tables.embeddings(spark, sf).limit(0).write.parquet(s"$dir/embeddings.parquet")
+    val e = intercept[IllegalArgumentException] {
+      similarity.Ann.coarseCells(spark, dir, 4)
+    }
+    assert(e.getMessage.contains("empty embeddings table"), e.getMessage)
+  }
+
   test("graph_pagerank: floor holds, dangling vertices sit exactly on it, hubs rise above") {
     import org.apache.spark.sql.functions._
     val out = dedup.Dedup.pagerank(spark, sf)
